@@ -36,8 +36,12 @@ Layout::
     <path>/_commits/<%020d>.json          one manifest per commit (write-last = atomic publish)
     <path>/data/<commit>/part-*.parquet   data files written by that commit
 
-Single-writer per table is assumed (v1), as in the reference's
-InProcessLockProvider setup (``create_hudi_tables.py:181-182``).
+Concurrent writers are detected, not prevented: the manifest publish is
+an atomic exclusive create, so two writers racing one commit id produce
+exactly one winner and the loser fails loud (the reference gets the same
+guarantee from its InProcessLockProvider, ``create_hudi_tables.py:181-182``).
+``upsert(occ_retries=...)`` turns the loss into an optimistic-concurrency
+retry against the winner's state.
 """
 
 from __future__ import annotations
@@ -47,7 +51,7 @@ import os
 import posixpath
 import re
 from datetime import datetime, timezone
-from typing import Any, Sequence
+from typing import Any, Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -1746,15 +1750,9 @@ class Table:
         ignored by readers and the cleaner. Default 0 = fail loud
         (single-writer deployments keep the race a hard error).
 
-        COW merge plan (all Spark-side, bounded by affected files):
-        1. within-batch dedup: max(precombine) per key wins (Q10 kernel);
-        2. manifest-stats prune current files to key-range candidates;
-        3. semi-join candidates × batch keys → affected files;
-        4. survivors = affected-file rows ∖ batch keys (anti-join),
-           keeping their original ``_commit_time``;
-        5. write survivors ∪ batch as the new commit's files; manifest
-           removes affected files, adds the new ones (manifest-last =
-           atomic publish).
+        COW tables dedup the batch (max(precombine) per key wins) and
+        rewrite only the files holding its keys — the plan is on
+        :meth:`_keyed_survivors`.
 
         MOR tables instead append the deduped batch as DELTA files — no
         read, no rewrite, O(batch) write cost (the Hudi MERGE_ON_READ
@@ -1776,8 +1774,10 @@ class Table:
                     return self._delta_write(
                         df, batch_id=batch_id, sink_id=sink_id
                     )
+                gated, commit, batch = self._stamped_batch(df)
                 return self._merge_write(
-                    df, action="upsert", batch_id=batch_id, sink_id=sink_id
+                    commit, batch, gated.select(self.key), "upsert",
+                    batch_id=batch_id, sink_id=sink_id,
                 )
             except RuntimeError as exc:
                 if "concurrent writer" not in str(exc) or i == attempts - 1:
@@ -1858,10 +1858,7 @@ class Table:
         batch_id: str | None = None,
         sink_id: str | None = None,
     ) -> str:
-        self._validate_batch(df)
-        df = self._gate_constraints(df)
-        commit = self._next_commit()
-        batch = self._dedup_batch(df).withColumn(META_COL, F.lit(commit))
+        _, commit, batch = self._stamped_batch(df)
         added = self._write_files(batch, commit, kind="delta")
         self._publish(
             commit, "deltacommit", added, [], batch.schema,
@@ -2036,44 +2033,20 @@ class Table:
         return commit
 
     def delete(self, keys_df: DataFrame) -> str:
-        """Delete by key. COW: rewrite of affected files minus the keys
-        (anti-join). MOR: append a TOMBSTONE delta (key + ``_deleted``) —
-        newest-commit-wins ordering makes it shadow every earlier version
-        at merge time; compaction physically drops the keys."""
+        """Delete by key. COW: rewrite the files holding the keys minus
+        the keys (:meth:`_keyed_survivors`). MOR: append a TOMBSTONE
+        delta (key + ``_deleted``) — newest-commit-wins ordering makes it
+        shadow every earlier version at merge time; compaction
+        physically drops the keys."""
+        commit = self._next_commit()
         if self.table_type == "mor":
-            commit = self._next_commit()
-            tomb = (
-                keys_df.select(self.key)
-                .distinct()
-                .withColumn(META_COL, F.lit(commit))
-                .withColumn("_deleted", F.lit(True))
-            )
+            tomb = self._tombstones(keys_df.select(self.key), commit)
             added = self._write_files(tomb, commit, kind="delta")
             self._publish(commit, "deltacommit", added, [], None)
             return commit
-        commit = self._next_commit()
-        # no .distinct(): the COW consumers (envelope agg, semi-join,
-        # anti-join, membership probes) are all duplicate-tolerant, so
-        # the exchange it costs buys nothing (the MOR tombstone branch
-        # above keeps its distinct — tomb ROWS must be one per key)
-        keys = keys_df.select(self.key)
-        entries = self.current_files()
-        candidates = self._prune_by_keys(entries, keys)
-        if not candidates:
-            self._publish(commit, "delete", [], [], None)
-            return commit
-        existing = self._with_file(candidates)
-        affected = self._affected_files(existing, keys)
-        if not affected:
-            self._publish(commit, "delete", [], [], None)
-            return commit
-        survivors = self._read_entries(
-            self._affected_entries(candidates, affected)
-        ).join(keys, self.key, "left_anti")
-        added = self._write_files(survivors, commit)
-        removed = self._to_rel(affected)
-        self._publish(commit, "delete", added, removed, survivors.schema)
-        return commit
+        return self._merge_write(
+            commit, None, keys_df.select(self.key), "delete"
+        )
 
     def delete_where(
         self, condition, filters: dict[str, Any] | None = None
@@ -2132,25 +2105,17 @@ class Table:
                     else:
                         rest.append(e)
                 candidates = rest
-        if not candidates and not full_drop:
-            self._publish(commit, "delete", [], [], None)
-            return commit
-        affected: list[str] = []
-        if candidates:
-            tagged = self._with_file(candidates)
-            affected = [
-                r["_file"]
-                for r in tagged.where(cond).select("_file").distinct().collect()
-            ]
+        affected = self._entries_matching(
+            candidates, lambda rows: rows.where(cond)
+        )
         if not affected:
             self._publish(commit, "delete", [], full_drop, None)
             return commit
-        survivors = (
-            self._read_entries(self._affected_entries(candidates, affected))
-            .where(~F.coalesce(cond, F.lit(False)))
+        survivors = self._read_entries(affected).where(
+            ~F.coalesce(cond, F.lit(False))
         )
         added = self._write_files(survivors, commit)
-        removed = self._to_rel(affected) + full_drop
+        removed = [e["path"] for e in affected] + full_drop
         self._publish(commit, "delete", added, removed, survivors.schema)
         return commit
 
@@ -2213,17 +2178,13 @@ class Table:
         candidates = entries
         if filters:
             candidates = [e for e in entries if _stats_match(e, filters)]
-        affected: list[str] = []
-        if candidates:
-            tagged = self._with_file(candidates)
-            affected = [
-                r["_file"]
-                for r in tagged.where(cond).select("_file").distinct().collect()
-            ]
+        affected = self._entries_matching(
+            candidates, lambda rows: rows.where(cond)
+        )
         if not affected:
             self._publish(commit, "update", [], [], None)
             return commit
-        base = self._read_entries(self._affected_entries(candidates, affected))
+        base = self._read_entries(affected)
         hit = F.coalesce(cond, F.lit(False))
         out = base.select(
             *[
@@ -2236,8 +2197,9 @@ class Table:
             ]
         )
         added = self._write_files(out, commit)
-        removed = self._to_rel(affected)
-        self._publish(commit, "update", added, removed, out.schema)
+        self._publish(
+            commit, "update", added, [e["path"] for e in affected], out.schema
+        )
         return commit
 
     def restore(self, as_of: str) -> str:
@@ -2322,10 +2284,15 @@ class Table:
 
         - source rows with ``delete_col`` true delete their key;
         - all other source rows upsert (matched → replace, unmatched →
-          insert), with within-batch max(precombine) resolution.
+          insert), with within-batch max(precombine) resolution;
+        - a key with both a flagged and an unflagged row in ``source``
+          resolves to DELETE, whatever the precombine order.
 
-        One pass over the affected files only — same cost envelope as
-        :meth:`upsert`.
+        Write-side constraints gate only the upsert rows; a quarantined
+        row leaves the stored row with its key in place. COW: one
+        rewrite of the files holding any source key
+        (:meth:`_keyed_survivors`) — the :meth:`upsert` cost envelope.
+        MOR: one delta commit of upsert rows plus tombstones.
         """
         if delete_col is None:
             return self.upsert(source)
@@ -2639,63 +2606,31 @@ class Table:
     def _merge_with_deletes(
         self, source: DataFrame, flag, delete_col: str
     ) -> str:
+        upserts = source.where(~flag).drop(delete_col)
+        gated, commit, batch = self._stamped_batch(upserts)
+        del_keys = source.where(flag).select(self.key)
+        # a key both flagged and unflagged in the source resolves to
+        # DELETE: its upsert row drops here, its stored rows go below
+        batch = batch.join(del_keys, self.key, "left_anti")
         if self.table_type == "mor":
             # MOR merge = ONE delta commit carrying both the upsert rows
             # and the tombstones (one file set, one manifest): an
             # incremental reader can never observe a torn merge where
-            # updates landed but deletes haven't (the old two-commit
-            # shape, removed r6). The read-side merge reconciles; no
-            # rewrite. A key both flagged and unflagged in the source
-            # resolves to DELETE (the order the two commits used to
-            # apply), enforced by the anti-join below.
-            upserts = source.where(~flag).drop(delete_col)
-            self._validate_batch(upserts)
-            upserts = self._gate_constraints(upserts)
-            commit = self._next_commit()
-            batch = self._dedup_batch(upserts).withColumn(
-                META_COL, F.lit(commit)
-            )
-            tomb_keys = source.where(flag).select(self.key).distinct()
-            batch = batch.join(tomb_keys, self.key, "left_anti")
-            tomb = tomb_keys.withColumn(META_COL, F.lit(commit)).withColumn(
-                "_deleted", F.lit(True)
-            )
+            # updates landed but deletes haven't. The read-side merge
+            # reconciles; no rewrite.
             out = batch.withColumn("_deleted", F.lit(False)).unionByName(
-                tomb, allowMissingColumns=True
+                self._tombstones(del_keys, commit), allowMissingColumns=True
             )
             added = self._write_files(out, commit, kind="delta")
             # manifest schema stays tombstone-free (the MOR read path
             # widens it, _read_entries) — same contract as delete()
             self._publish(commit, "deltacommit", added, [], batch.schema)
             return commit
-        cow_upserts = source.where(~flag).drop(delete_col)
-        self._validate_batch(cow_upserts)  # same gate as the MOR branch
-        upserts = self._dedup_batch(self._gate_constraints(cow_upserts))
-        commit = self._next_commit()
-        batch = upserts.withColumn(META_COL, F.lit(commit))
-        all_keys = (
-            # both update and delete keys affect files; no .distinct()
-            # — every consumer is duplicate-tolerant (see _merge_write)
-            source.select(self.key)
+        # keys from the GATED upserts: a quarantined row never reaches
+        # the table, so it must not displace the stored row either
+        return self._merge_write(
+            commit, batch, gated.select(self.key).union(del_keys), "merge"
         )
-        entries = self.current_files()
-        out = batch
-        removed: list[str] = []
-        if entries:
-            candidates = self._prune_by_keys(entries, all_keys)
-            if candidates:
-                existing = self._with_file(candidates)
-                affected = self._affected_files(existing, all_keys)
-                if affected:
-                    survivors = self._read_entries(
-                        self._affected_entries(candidates, affected)
-                    ).join(all_keys, self.key, "left_anti")
-                    out = survivors.unionByName(batch, allowMissingColumns=True)
-                    removed = self._to_rel(affected)
-        # deleted keys simply don't reappear in the rewrite
-        added = self._write_files(out, commit)
-        self._publish(commit, "merge", added, removed, out.schema)
-        return commit
 
     def merge_into(
         self,
@@ -3171,9 +3106,9 @@ class Table:
                 F.col(on_key_col).alias(self.key)
             )
             candidates = self._prune_by_keys(entries, src_keys)
-        affected: list[str] = []
+        affected: list[dict] = []
         if candidates and matched:
-            tagged = self._with_file(candidates).alias(ta)
+            tagged = self._read_entries(candidates, with_file=True).alias(ta)
             pairs = tagged.join(src, on_cond, "inner").select(
                 F.col(f"{ta}.{self.key}").alias("__mi_k"), "_file"
             )
@@ -3197,20 +3132,13 @@ class Table:
                     "matched by more than one source row while a WHEN "
                     "MATCHED clause exists — dedup the source first"
                 )
-            affected = list(row["files"] or [])
+            hit = set(self._to_rel(row["files"] or []))
+            affected = [e for e in candidates if e["path"] in hit]
         # A by-source clause widens the rewrite to EVERY candidate file
         # (any unmatched target row may be claimed — the documented cost
         # of the clause family); otherwise only files containing ON
         # matches rewrite.
-        rewrite_entries = (
-            candidates
-            if not_matched_by_source
-            else (
-                self._affected_entries(candidates, affected)
-                if affected
-                else []
-            )
-        )
+        rewrite_entries = candidates if not_matched_by_source else affected
         out_parts = []
         removed: list[str] = []
         if rewrite_entries:
@@ -3314,11 +3242,8 @@ class Table:
             if not self._mi_inserts_collision_free(
                 on, on_key_col, not_matched, ta, sa
             ):
-                # key multiset from the gated PRE-dedup frame (the
-                # _merge_write discipline): the anti-join/prune/semi-
-                # join consumers are duplicate-tolerant, and deriving
-                # from ``ins`` would replay the dedup groupBy per
-                # consumer
+                # keys from the gated PRE-dedup frame (see
+                # _keyed_survivors)
                 ins_keys = ins_src.select(self.key)
                 if out_parts:
                     out_parts[0] = out_parts[0].join(
@@ -3326,22 +3251,10 @@ class Table:
                     )
                 rewritten = {e["path"] for e in rewrite_entries}
                 remaining = [e for e in entries if e["path"] not in rewritten]
-                coll_cand = (
-                    self._prune_by_keys(remaining, ins_keys) if remaining else []
-                )
-                coll = (
-                    self._affected_files(self._with_file(coll_cand), ins_keys)
-                    if coll_cand
-                    else []
-                )
-                if coll:
-                    surv2 = _widen(
-                        self._read_entries(
-                            self._affected_entries(coll_cand, coll)
-                        )
-                    ).join(ins_keys, self.key, "left_anti")
-                    out_parts.append(surv2)
-                    removed = [*removed, *self._to_rel(coll)]
+                coll, surv2 = self._keyed_survivors(remaining, ins_keys)
+                if surv2 is not None:
+                    out_parts.append(_widen(surv2))
+                    removed = [*removed, *(e["path"] for e in coll)]
             out_parts.append(ins.select(*table_cols))
         if not out_parts:
             # evolving no-op merges still record the widened schema
@@ -3725,12 +3638,12 @@ class Table:
         unchanged, original ``_commit_time`` kept) — late-arriving data
         can't clobber newer state. Equal precombine → incoming wins.
 
-        Same cost envelope as :meth:`upsert` — stats-pruned candidates,
-        one semi-join to find affected files, one rewrite of those files
-        only. The column merge is a single key-equi join between the
-        affected rows and the (deduped) batch: at 100 TB both sides
-        shuffle on the key once, and the batch side is usually the small
-        one (AQE broadcasts it).
+        Same cost envelope as :meth:`upsert` — one rewrite of the files
+        holding batch keys only (:meth:`_keyed_survivors`). The column
+        merge is a single key-equi join between the affected rows and
+        the (deduped) batch: at 100 TB both sides shuffle on the key
+        once, and the batch side is usually the small one (AQE
+        broadcasts it).
 
         MOR tables (r13, lifting the r12 COW-only limitation): the
         column merge resolves at WRITE time against the merge view of
@@ -3743,47 +3656,28 @@ class Table:
         O(batch) delta write — the read the COW path pays too, minus
         its O(affected) rewrite.
         """
-        self._validate_batch(df)
-        df = self._gate_constraints(df)
-        commit = self._next_commit()
-        batch = self._dedup_batch(df)
+        gated, commit, stamped = self._stamped_batch(df)
         table_schema = self._schema()
         entries = self.current_files()
         if table_schema is None or not entries:
             # first write: nothing to merge against
-            stamped = batch.withColumn(META_COL, F.lit(commit))
             added = self._write_files(stamped, commit)
             self._publish(commit, "partial_update", added, [], stamped.schema)
             return commit
+        batch = stamped.drop(META_COL)
         update_cols = [c for c in batch.columns if c != self.key]
-        # key multiset from the raw gated frame (see _merge_write): all
-        # consumers (prune agg, semi/anti joins, membership probes) are
-        # duplicate-tolerant, and deriving from ``batch`` would replay
-        # the dedup groupBy per consumer
-        keys = df.select(self.key)
-        out = None
-        removed: list[str] = []
-        candidates = self._prune_by_keys(entries, keys)
-        affected: list[str] = []
-        if candidates:
-            existing = self._with_file(candidates)
-            affected = self._affected_files(existing, keys)
+        # keys from the raw gated frame (see _keyed_survivors)
+        keys = gated.select(self.key)
+        affected, survivors = self._keyed_survivors(entries, keys)
         if affected:
-            aff_rows = self._read_entries(
-                self._affected_entries(candidates, affected)
-            )
+            aff_rows = self._read_entries(affected)
             if self.table_type == "mor":
                 # current value per affected key = the merge view over
                 # the affected files (every version of an affected key
                 # lives in an affected file, by definition of affected)
                 aff_rows = self._merge_view(aff_rows)
-                survivors = None  # nothing rewrites, nothing retires
-            else:
-                survivors = aff_rows.join(keys, self.key, "left_anti")
-                removed = self._to_rel(affected)
             matched_old = aff_rows.join(keys, self.key, "left_semi")
         else:
-            survivors = None
             matched_old = self._read_entries([]).limit(0)
             if self.table_type == "mor" and "_deleted" in matched_old.columns:
                 matched_old = matched_old.drop("_deleted")
@@ -3851,23 +3745,20 @@ class Table:
         )
         if self.table_type == "mor":
             # losers drop (the stored winner stays in the chain);
-            # winners + new keys append as full-row deltas
-            merged = joined.where(batch_wins).select(*merged_cols)
-        else:
-            merged = joined.select(*merged_cols)
-        out = (
-            merged
-            if survivors is None
-            else survivors.unionByName(merged, allowMissingColumns=True)
-        )
-        if self.table_type == "mor":
+            # winners + new keys append as full-row deltas; nothing
+            # rewrites, nothing retires
+            out = joined.where(batch_wins).select(*merged_cols)
             added = self._write_files(out, commit, kind="delta")
             self._publish(commit, "partial_update", added, [], out.schema)
-        else:
-            added = self._write_files(out, commit)
-            self._publish(
-                commit, "partial_update", added, removed, out.schema
-            )
+            return commit
+        out = joined.select(*merged_cols)
+        if survivors is not None:
+            out = survivors.unionByName(out, allowMissingColumns=True)
+        added = self._write_files(out, commit)
+        self._publish(
+            commit, "partial_update", added, [e["path"] for e in affected],
+            out.schema,
+        )
         return commit
 
     # -- write internals -------------------------------------------------
@@ -4020,75 +3911,111 @@ class Table:
             .select("_best.*")
         )
 
+    def _stamped_batch(self, df: DataFrame) -> tuple[DataFrame, str, DataFrame]:
+        """Validate and constraint-gate a write batch, allocate its
+        commit id, and dedup it (max(precombine) per key wins): returns
+        the gated rows, the commit, and the deduped rows stamped with
+        the commit."""
+        self._validate_batch(df)
+        gated = self._gate_constraints(df)
+        commit = self._next_commit()
+        batch = self._dedup_batch(gated).withColumn(META_COL, F.lit(commit))
+        return gated, commit, batch
+
     def _merge_write(
         self,
-        df: DataFrame,
+        commit: str,
+        rows: DataFrame | None,
+        keys: DataFrame,
         action: str,
         batch_id: str | None = None,
         sink_id: str | None = None,
     ) -> str:
-        self._validate_batch(df)
-        df = self._gate_constraints(df)
-        commit = self._next_commit()
-        batch = self._dedup_batch(df).withColumn(META_COL, F.lit(commit))
-        entries = self.current_files()
-        out = batch
-        removed: list[str] = []
-        if entries:
-            # Key set from the RAW gated frame, not the deduped batch,
-            # and with no .distinct(): every consumer below is
-            # duplicate-tolerant — min/max envelope agg, bloom/record-
-            # index membership, the affected-files LEFT SEMI join and
-            # the survivors LEFT ANTI join all give identical results on
-            # a multiset of keys. Deriving keys from ``batch`` instead
-            # made each of those consumers replay the full-width dedup
-            # groupBy shuffle (measured: 3 extra dedup executions per
-            # merge commit); from ``df`` they replay only a column-
-            # pruned scan, and dropping the distinct removes one
-            # exchange from every consumer. (An explicit persist of the
-            # deduped batch was also tried: the cache write + static-
-            # partition cache reads cost MORE than the recomputation at
-            # every probed size — 1.05-1.35x slower, reverted.)
-            keys = df.select(self.key)
-            candidates = self._prune_by_keys(entries, keys)
-            if candidates:
-                existing = self._with_file(candidates)
-                affected = self._affected_files(existing, keys)
-                if affected:
-                    survivors = self._read_entries(
-                        self._affected_entries(candidates, affected)
-                    ).join(keys, self.key, "left_anti")
-                    out = survivors.unionByName(batch, allowMissingColumns=True)
-                    removed = self._to_rel(affected)
+        """Publish ``commit`` as one copy-on-write keyed rewrite: the
+        stored rows whose key is in ``keys`` are dropped, ``rows``
+        (already stamped with ``commit``; None for a pure delete) are
+        added, and the other rows of the files holding those keys are
+        carried over (:meth:`_keyed_survivors`). A commit that neither
+        rewrites a file nor adds rows publishes an empty manifest
+        without starting a write job."""
+        affected, survivors = self._keyed_survivors(self.current_files(), keys)
+        out = survivors if rows is None else rows
+        if survivors is not None and rows is not None:
+            out = survivors.unionByName(rows, allowMissingColumns=True)
+        if out is None:
+            self._publish(commit, action, [], [], None)
+            return commit
         added = self._write_files(out, commit)
         self._publish(
-            commit, action, added, removed, out.schema,
+            commit, action, added, [e["path"] for e in affected], out.schema,
             batch_id=batch_id, sink_id=sink_id,
         )
         return commit
 
-    def _with_file(self, entries: list[dict]) -> DataFrame:
-        return self._read_entries(entries, with_file=True)
+    def _keyed_survivors(
+        self, entries: list[dict], keys: DataFrame
+    ) -> tuple[list[dict], DataFrame | None]:
+        """The copy-on-write merge plan, all Spark-side and bounded by
+        the affected files, never the table:
 
-    def _affected_entries(
-        self, candidates: list[dict], affected: list[str]
-    ) -> list[dict]:
-        """Manifest entries for the affected files. Rewinding to the
-        entry list lets the rewrite READ exactly those files — no
-        ``isin`` literal list bloating the plan at 10⁵ files, no
-        post-scan filter/join, and the scan itself shrinks to the
-        affected set (the cheapest possible plan at any file count)."""
-        rel = set(self._to_rel(affected))
-        return [e for e in candidates if e["path"] in rel]
+        1. prune ``entries`` to the files that can hold a key — manifest
+           key-range stats, bucket, bloom and record index
+           (:meth:`_prune_by_keys`);
+        2. semi-join the candidates' rows × ``keys`` → affected files;
+        3. survivors = affected-file rows ∖ ``keys`` (anti-join), keeping
+           their original ``_commit_time``.
 
-    def _affected_files(self, existing: DataFrame, keys: DataFrame) -> list[str]:
-        rows = (
-            existing.join(keys, self.key, "left_semi")
-            .select("_file")
-            .distinct()
-            .collect()
+        Returns the affected manifest entries and the survivors (None
+        when no file is affected). The caller writes survivors ∪ its new
+        rows as the commit's files and retires the affected entries in
+        the same manifest (manifest-last = atomic publish).
+
+        ``keys`` is a key MULTISET taken from the raw gated batch, not
+        the deduped one, and with no ``.distinct()``: every consumer —
+        min/max envelope agg, bloom/record-index membership, the semi
+        join and the anti join — gives identical results on duplicates.
+        Deriving keys from the deduped batch made each consumer replay
+        the full-width dedup groupBy shuffle (measured: 3 extra dedup
+        executions per merge commit); from the raw frame they replay
+        only a column-pruned scan, and dropping the distinct removes one
+        exchange from every consumer. (An explicit persist of the
+        deduped batch was also tried: the cache write + static-partition
+        cache reads cost MORE than the recomputation at every probed
+        size — 1.05-1.35x slower.)"""
+        candidates = self._prune_by_keys(entries, keys) if entries else []
+        affected = self._entries_matching(
+            candidates, lambda rows: rows.join(keys, self.key, "left_semi")
         )
-        return [r["_file"] for r in rows]
+        if not affected:
+            return [], None
+        survivors = self._read_entries(affected).join(
+            keys, self.key, "left_anti"
+        )
+        return affected, survivors
+
+    def _entries_matching(
+        self, entries: list[dict], match: Callable[[DataFrame], DataFrame]
+    ) -> list[dict]:
+        """The entries whose files hold at least one row that ``match``
+        (tagged frame → matching rows) keeps: one scan with per-row file
+        provenance, one distinct-file collect. Returning manifest entries
+        lets the rewrite read exactly those files — no ``isin`` literal
+        list bloating the plan at 10⁵ files, no post-scan filter/join."""
+        if not entries:
+            return []
+        tagged = self._read_entries(entries, with_file=True)
+        files = match(tagged).select("_file").distinct().collect()
+        hit = set(self._to_rel([r["_file"] for r in files]))
+        return [e for e in entries if e["path"] in hit]
+
+    def _tombstones(self, keys: DataFrame, commit: str) -> DataFrame:
+        """MOR delete markers for ``keys``, stamped with ``commit``: one
+        ROW per key (hence the distinct), ``_deleted`` true."""
+        return (
+            keys.distinct()
+            .withColumn(META_COL, F.lit(commit))
+            .withColumn("_deleted", F.lit(True))
+        )
 
     def _to_rel(self, abs_paths: list[str]) -> list[str]:
         base = self.path.rstrip("/") + "/"

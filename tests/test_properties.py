@@ -7,6 +7,7 @@ semantics, incremental-window composition, and delete/reinstate.
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -200,6 +201,48 @@ def test_partial_update_with_full_columns_equals_upsert(
     a = sorted(tuple(r[c] for c in cols) for r in t1.snapshot().collect())
     b = sorted(tuple(r[c] for c in cols) for r in t2.snapshot().collect())
     assert a == b
+
+
+DELETE_FLAG_ROW = st.tuples(
+    st.integers(min_value=0, max_value=9),   # key (overlaps + absent)
+    st.integers(min_value=0, max_value=5),   # ver
+    st.sampled_from(["x", "y"]),             # val
+    st.sampled_from([True, False, None]),    # delete flag (NULL = upsert)
+)
+
+
+@pytest.mark.parametrize("table_type", ["cow", "mor"])
+@settings(
+    max_examples=8,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(rows=BATCH, src=st.lists(DELETE_FLAG_ROW, min_size=1, max_size=12))
+def test_merge_with_delete_col_matches_reference_model(
+    spark, tmp_path_factory, table_type, rows, src
+):
+    """merge(delete_col=...) vs a dict model: unflagged and NULL-flagged
+    rows upsert (max precombine per key, incoming wins over the stored
+    row), flagged keys delete — also when the same key has an unflagged
+    row too, and as a no-op when the table never held the key."""
+    t = Table.create(
+        spark,
+        f"{tmp_path_factory.mktemp('md')}/t",
+        key="id", precombine="ver", table_name="t",
+        table_type=table_type,
+    )
+    t.upsert(_df(spark, rows))
+    sdf = spark.createDataFrame(
+        [(k, v, f"{val}{k}:{v}", d) for k, v, val, d in src],
+        "id long, ver long, val string, _del boolean",
+    )
+    t.merge(sdf, delete_col="_del")
+    want = expected_single_batch(rows)
+    want.update(expected_single_batch([r[:3] for r in src if not r[3]]))
+    for k, _v, _val, d in src:
+        if d:
+            want.pop(k, None)
+    assert _snap(t) == want
 
 
 MERGE_SRC_ROW = st.tuples(

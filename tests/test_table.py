@@ -452,15 +452,38 @@ def test_mor_merge_is_single_commit(spark, tpath):
     ch = {r["id"]: r["_change_type"] for r in t.changes_full(begin=c0).collect()}
     assert ch == {1: "update", 2: "delete", 3: "insert"}
     assert rows_of(t.snapshot(), "id", "val") == [(1, "a2"), (3, "c")]
-    # a key flagged BOTH ways in one source resolves to delete
-    t2 = make_mor(spark, str(tpath) + "2")
-    t2.bulk_insert(df_of(spark, [(7, 1, "z")]))
+    # a key flagged BOTH ways in one source resolves to delete, on
+    # either table type
     both = spark.createDataFrame(
         [(7, 2, "upd", False), (7, 3, "del", True)],
         "id long, ver long, val string, _del boolean",
     )
-    t2.merge(both, delete_col="_del")
-    assert rows_of(t2.snapshot(), "id") == []
+    for table_type in ("cow", "mor"):
+        t2 = make_table(
+            spark, f"{tpath}_{table_type}", table_type=table_type
+        )
+        t2.bulk_insert(df_of(spark, [(7, 1, "z")]))
+        t2.merge(both, delete_col="_del")
+        assert rows_of(t2.snapshot(), "id") == [], table_type
+
+
+@pytest.mark.parametrize("table_type", ["cow", "mor"])
+def test_merge_quarantined_upsert_keeps_stored_row(spark, tpath, table_type):
+    """A merge(delete_col=...) row diverted by a write constraint never
+    reaches the table, so it must not displace the stored row with its
+    key either; flagged deletes and clean upserts still apply."""
+    t = make_table(
+        spark, tpath, table_type=table_type,
+        constraints={"not_bad": "val <> 'bad'"},
+    )
+    t.upsert(df_of(spark, [(1, 1, "a"), (2, 1, "b"), (3, 1, "c")]))
+    src = spark.createDataFrame(
+        [(1, 2, "bad", False), (2, 2, "b2", False), (3, 2, "c", True)],
+        "id long, ver long, val string, _del boolean",
+    )
+    t.merge(src, delete_col="_del")
+    assert rows_of(t.snapshot(), "id", "val") == [(1, "a"), (2, "b2")]
+    assert [r["id"] for r in t.quarantine().collect()] == [1]
 
 
 def test_mor_partitioned_snapshot(spark, tpath):
